@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Dev-loop timing of individual queries: `BenchOne <sfDir> <name>...`
   * — times each named query (cold, in-session) and prints one line per
@@ -8,14 +7,7 @@ object BenchOne {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val names = args.drop(1)
-    val cpus = graft.io.Config.fromEnv.int("SPARK_GRAFT_CPUS", 32).toString
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(graft.io.Config.fromEnv.int("SPARK_GRAFT_CPUS", 32))
     names.foreach { name =>
       // noop write, not count(): count() lets the optimizer prune
       // aggregate work and eliminate unique-key outer joins, so it

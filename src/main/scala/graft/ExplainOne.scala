@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Dev-loop plan inspection: `ExplainOne <sfDir> <name>...` — prints
   * each named query's formatted physical plan (the 100 TB audit
@@ -9,14 +8,7 @@ object ExplainOne {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val names = args.drop(1)
-    val cpus = graft.io.Config.fromEnv.int("SPARK_GRAFT_CPUS", 32).toString
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(graft.io.Config.fromEnv.int("SPARK_GRAFT_CPUS", 32))
     names.foreach { name =>
       println(s"===== $name =====")
       SparkEntry.queries(name)(spark, sfDir).explain("formatted")

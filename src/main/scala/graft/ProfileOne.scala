@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.scheduler._
 import scala.collection.mutable
 
@@ -16,14 +15,7 @@ object ProfileOne {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val names = args.drop(1)
-    val cpus = graft.io.Config.fromEnv.int("SPARK_GRAFT_CPUS", 32).toString
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(graft.io.Config.fromEnv.int("SPARK_GRAFT_CPUS", 32))
     val jobs = mutable.ArrayBuffer[(Int, Long, Long, Seq[Int])]()
     val stages = mutable.Map[Int, StageRec]()
     val jobStart = mutable.Map[Int, (Long, Seq[Int])]()

@@ -53,14 +53,7 @@ object ZorderProbe {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val cpus = graft.io.Config.fromEnv.int("SPARK_GRAFT_CPUS", 32).toString
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(graft.io.Config.fromEnv.int("SPARK_GRAFT_CPUS", 32))
     graft.queries.Tables.prep(spark)
     val (lin, zo) = graft.queries.Relational.zorderWritten(spark, sfDir)
     for ((label, path) <- Seq(("linear", lin), ("zorder", zo));

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Session.withConf
+
 /** Layer-B relational surface: the BI/reporting queries the
   * reference's loaded tables exist to serve (SURVEY §2.4-§2.6;
   * purpose stated at reference README.md:113 — "listos para ser
@@ -1121,14 +1123,11 @@ object Relational {
     // autoBroadcastJoinThreshold=-1 reproduces the 100 TB condition at
     // toy scale: InjectRuntimeFilter only fires for probably-SHUFFLE
     // joins, and fact tables this small look broadcast-able.
-    val scoped = Map(
-      "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
-      "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "1KB",
-      "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold" -> "100MB",
-      "spark.sql.autoBroadcastJoinThreshold" -> "-1")
-    val prev = scoped.keys.map(k => k -> spark.conf.getOption(k)).toMap
-    scoped.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
+    withConf(spark,
+        "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
+        "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "1KB",
+        "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold" -> "100MB",
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       // Eager materialization: injection happens at optimization time,
       // which must run while the scoped confs are in force. The DIGEST
       // (3 rows) is collected and re-wrapped rather than checkpointed:
@@ -1141,9 +1140,6 @@ object Relational {
       import scala.jdk.CollectionConverters._
       spark.createDataFrame(
         digest.collect().toSeq.asJava, digest.schema)
-    } finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
     }
   }
 

@@ -2337,7 +2337,8 @@ object Similarity {
     * seed sample), working beam width B, and hop count H. At 100 TB
     * these are the recall/cost dials every graph-ANN deployment
     * exposes; per query the search touches E + H·B·3 candidates —
-    * independent of corpus size. */
+    * independent of corpus size. BENCH_NOTES "r10 beam hop sweep"
+    * records the recall/cost curve over H = 1..4. */
   private val BeamSeeds = 64
   private val BeamEntry = 8
   private val BeamWidth = 16
@@ -2387,23 +2388,16 @@ object Similarity {
     // both consume it, and the walk is a deterministic derived table
     // of queries×5 rows — one walk per (session, dir), like every
     // other shared index artifact here.
-    memo(spark, dir, "graph_beam_result")(graphBeamWalk(spark, dir))
-      .orderBy("qid", "rnk")
-  }
-
-  /** The walk with its hop knob exposed ([[graft.BeamSweep]] measures
-    * the H=1..4 recall/cost curve for BENCH_NOTES; q168 serves the
-    * production H = [[BeamHops]]). */
-  private[graft] def graphBeamWalk(spark: SparkSession, dir: String,
-      hops: Int = BeamHops): DataFrame =
-    beamWalkOver(spark,
+    memo(spark, dir, "graph_beam_result")(beamWalkOver(spark,
       vecs(spark, dir).select(col("vec_id"), col("v"), col("nrm")),
       vecs(spark, dir).filter(queryPred)
         .select(col("vec_id").as("qid"), col("v").as("qv"),
           col("nrm").as("qn")),
       refinedEdges(spark, dir).select(col("src"), col("dst")),
       seedRows(spark, dir, BeamSeeds).select(col("vec_id")),
-      hops, 5)
+      BeamHops, 5))
+      .orderBy("qid", "rnk")
+  }
 
   /** The beam walk over arbitrary (corpus, queries, graph, seeds) —
     * factored so q198's incremental insert can walk DELTA vectors

@@ -6,6 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 
+import graft.Session.withConf
 import graft.streaming.Streams
 
 /** Streaming queries: each runs a Structured Streaming job to
@@ -273,19 +274,11 @@ object StreamingQ {
     prep(spark)
     val scratch = Reference.newScratch("graft_ivf_index")
     val out = scratch.resolve("index").toString
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try {
-      val q = Streams.embeddingsStream(spark, dir).writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-          Similarity.ivfAssign(spark, dir, batch)
-            .write.mode("append").partitionBy("cell").parquet(out)
-        }
-        .option("checkpointLocation", scratch.resolve("ckpt").toString)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+    Streams.drain(Streams.embeddingsStream(spark, dir),
+        scratch.resolve("ckpt").toString) { (batch, _) =>
+      Similarity.ivfAssign(spark, dir, batch)
+        .write.mode("append").partitionBy("cell").parquet(out)
+    }
     spark.read.parquet(out)
       .groupBy(col("cell"))
       .agg(count(lit(1)).as("n_vecs"), sum(col("vec_id")).as("sum_ids"))
@@ -312,18 +305,10 @@ object StreamingQ {
   def streamLabelRepair(spark: SparkSession, dir: String): DataFrame = {
     prep(spark)
     val store = Reference.newScratch("graft_label_repair")
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try {
-      val q = Streams.documentsStream(spark, dir).writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-          Curation.applyArrivalBatch(spark, batch, store)
-        }
-        .option("checkpointLocation", store.resolve("ckpt").toString)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+    Streams.drain(Streams.documentsStream(spark, dir),
+        store.resolve("ckpt").toString) { (batch, _) =>
+      Curation.applyArrivalBatch(spark, batch, store)
+    }
     spark.read.parquet(Curation.latestLabels(store).get.toString)
       .groupBy(col("root")).agg(count(lit(1)).as("csize"))
       .groupBy(col("csize"))
@@ -348,18 +333,10 @@ object StreamingQ {
   def streamPostingsMerge(spark: SparkSession, dir: String): DataFrame = {
     prep(spark)
     val store = Reference.newScratch("graft_postings_stream")
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try {
-      val q = Streams.documentsStream(spark, dir).writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-          TextAnalysis.applyPostingsBatch(spark, batch, store.toString)
-        }
-        .option("checkpointLocation", store.resolve("ckpt").toString)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+    Streams.drain(Streams.documentsStream(spark, dir),
+        store.resolve("ckpt").toString) { (batch, _) =>
+      TextAnalysis.applyPostingsBatch(spark, batch, store.toString)
+    }
     TextAnalysis.postingsDigestOf(graft.io.ArtifactStore.read(
       spark, store.toString, TextAnalysis.StreamPostingsArtifact))
   }
@@ -380,18 +357,10 @@ object StreamingQ {
   def streamBm25Merge(spark: SparkSession, dir: String): DataFrame = {
     prep(spark)
     val store = Reference.newScratch("graft_bm25_stream")
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try {
-      val q = Streams.documentsStream(spark, dir).writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-          TextAnalysis.applyBm25Batch(spark, batch, store.toString)
-        }
-        .option("checkpointLocation", store.resolve("ckpt").toString)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+    Streams.drain(Streams.documentsStream(spark, dir),
+        store.resolve("ckpt").toString) { (batch, _) =>
+      TextAnalysis.applyBm25Batch(spark, batch, store.toString)
+    }
     TextAnalysis.bm25FromStreamStore(spark, store.toString)
   }
 
@@ -412,18 +381,10 @@ object StreamingQ {
   def streamRollupMaintain(spark: SparkSession, dir: String): DataFrame = {
     prep(spark)
     val store = Reference.newScratch("graft_rollup_stream")
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try {
-      val q = Streams.eventsStream(spark, dir).writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-          WarehouseIvm.applyRollupBatch(spark, batch, store.toString)
-        }
-        .option("checkpointLocation", store.resolve("ckpt").toString)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+    Streams.drain(Streams.eventsStream(spark, dir),
+        store.resolve("ckpt").toString) { (batch, _) =>
+      WarehouseIvm.applyRollupBatch(spark, batch, store.toString)
+    }
     WarehouseIvm.rollupOut(graft.io.ArtifactStore.read(
       spark, store.toString, WarehouseIvm.StreamRollupArtifact))
   }
@@ -443,24 +404,15 @@ object StreamingQ {
   def streamRollupAdditive(spark: SparkSession, dir: String): DataFrame = {
     prep(spark)
     val store = Reference.newScratch("graft_rollup_addstream")
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try {
-      val q = Streams.eventsStream(spark, dir).writeStream
-        .foreachBatch {
-          (batch: org.apache.spark.sql.DataFrame, id: Long) =>
-            // lineage = the checkpoint location: batch ids are only
-            // monotone within it, and the artifact's replay guard
-            // must refuse ids from any other lineage
-            WarehouseIvm.applyRollupBatchAdditive(
-              spark, batch, id, store.resolve("ckpt").toString,
-              store.toString)
-        }
-        .option("checkpointLocation", store.resolve("ckpt").toString)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+    Streams.drain(Streams.eventsStream(spark, dir),
+        store.resolve("ckpt").toString) { (batch, id) =>
+      // lineage = the checkpoint location: batch ids are only
+      // monotone within it, and the artifact's replay guard
+      // must refuse ids from any other lineage
+      WarehouseIvm.applyRollupBatchAdditive(
+        spark, batch, id, store.resolve("ckpt").toString,
+        store.toString)
+    }
     WarehouseIvm.rollupOut(graft.io.ArtifactStore.read(
       spark, store.toString, WarehouseIvm.AdditiveRollupArtifact))
   }
@@ -856,11 +808,9 @@ object StreamingQ {
       val src = it.find(_.getFileName.toString.endsWith(".parquet")).get
       java.nio.file.Files.move(src, arrivals.resolve(s"$name.parquet"))
     }
-    def runOnce(): Unit = {
-      val prev = spark.conf.get("spark.sql.shuffle.partitions")
-      spark.conf.set("spark.sql.shuffle.partitions", "4")
-      try {
-        val q = spark.readStream
+    def runOnce(): Unit =
+      withConf(spark, "spark.sql.shuffle.partitions" -> "4") {
+        spark.readStream
           .schema(org.apache.spark.sql.types.StructType(Seq(
             org.apache.spark.sql.types.StructField("event_id",
               org.apache.spark.sql.types.LongType),
@@ -884,9 +834,8 @@ object StreamingQ {
           .outputMode(OutputMode.Append())
           .trigger(Trigger.AvailableNow())
           .start()
-        q.awaitTermination()
-      } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
-    }
+          .awaitTermination()
+      }
     writeArrival("a", ev.filter(col("ts") < cut))
     runOnce()
     writeArrival("b", ev.filter(col("ts") >= cut).unionByName(

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.functions.col
 
+import graft.Session.withConf
+
 /** Harness-table access + per-query session prep. */
 object Tables {
 
@@ -88,12 +90,14 @@ object Tables {
     * therefore disabled around THIS materialization only: the static
     * plan's root is the explicit repartition, whose HashPartitioning
     * the checkpoint then carries, and consumers keyed on `cols` (with
-    * the session's shuffle-partition count, stable per session — the
-    * count is baked into the leaf at memo time) plan NO exchange on
-    * the artifact side. The build is a bounded one-off artifact
-    * construction, so losing AQE coalescing/skew handling inside it
-    * is immaterial; the conf flip is scoped to the eager checkpoint
-    * and the engine's entry points drive one query at a time.
+    * the session's shuffle-partition count) plan NO exchange on the
+    * artifact side. The count is baked into the leaf, so it is part of
+    * the memo key: a caller running under another count gets its own
+    * leaf, never one partitioned for a different count. The build is
+    * a bounded one-off artifact construction, so losing AQE
+    * coalescing/skew handling inside it is immaterial; the conf flip
+    * is scoped to the eager checkpoint and the engine's entry points
+    * drive one query at a time.
     *
     * Scale posture: the partition count follows
     * `spark.sql.shuffle.partitions` (scale-adaptive, not a local
@@ -102,13 +106,11 @@ object Tables {
   private[queries] def memoKeyed(spark: SparkSession, dir: String,
       key: String, cols: Seq[String])(build: => DataFrame): DataFrame = {
     ensureCleanup(spark)
-    tableMemo((spark, dir, key)) {
-      val n = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val n = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    tableMemo((spark, dir, s"$key@$n")) {
       val df = build.repartition(n, cols.map(col): _*)
-      val aqe = spark.conf.get("spark.sql.adaptive.enabled")
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-      try df.localCheckpoint()
-      finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
+      withConf(spark, "spark.sql.adaptive.enabled" -> "false")(
+        df.localCheckpoint())
     }
   }
 

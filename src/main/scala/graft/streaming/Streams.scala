@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
 import org.apache.spark.sql.types._
 
+import graft.Session.withConf
+
 /** Structured Streaming surface over the harness `events` stream
   * (SURVEY §2.10). The reference itself is a scheduled daily batch
   * (main.py:201-209; README.md:113) whose Spark-native form is an
@@ -224,22 +226,11 @@ object Streams {
     * touches. Checkpointing makes the replay restartable; the file
     * commit protocol makes each batch's overwrite atomic. */
   def incrementalLoad(df: DataFrame, path: String, partitionCol: String,
-      checkpoint: String): Unit = {
-    val spark = df.sparkSession
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try {
-      val q = df.writeStream
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          graft.io.IdempotentWriter.overwritePartitions(
-            batch, path, partitionCol, addLoadDate = false)
-        }
-        .option("checkpointLocation", checkpoint)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
-  }
+      checkpoint: String): Unit =
+    drain(df, checkpoint) { (batch, _) =>
+      graft.io.IdempotentWriter.overwritePartitions(
+        batch, path, partitionCol, addLoadDate = false)
+    }
 
   /** Streaming SCD2 dimension maintenance: each arriving batch of
     * (k, cents) member versions merges into the dimension at
@@ -271,21 +262,8 @@ object Streams {
     * partitions (the q105 scope discipline); dimensions are dwarfed
     * by facts, so the full-outer stays cheap. */
   def scd2Load(incoming: DataFrame, dimPath: String,
-      checkpoint: String): Unit = {
-    val spark = incoming.sparkSession
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try {
-      val q = incoming.writeStream
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          scd2Merge(batch, dimPath)
-        }
-        .option("checkpointLocation", checkpoint)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
-  }
+      checkpoint: String): Unit =
+    drain(incoming, checkpoint)((batch, _) => scd2Merge(batch, dimPath))
 
   private def scd2Merge(batchRaw: DataFrame, dimPath: String): Unit = {
     if (batchRaw.isEmpty) return
@@ -421,33 +399,39 @@ object Streams {
     * same arrivals into an all-seen anti-join and appends NOTHING —
     * the idempotent re-run contract, dedup-flavored. */
   def dedupCorpusLoad(docs: DataFrame, fpExpr: org.apache.spark.sql.Column,
-      path: String, checkpoint: String): Unit = {
-    val spark = docs.sparkSession
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try {
-      val q = docs.writeStream
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          val cols = batch.columns.map(col).toIndexedSeq
-          val keepers = batch.withColumn("fp", fpExpr)
-            .groupBy(col("fp"))
-            .agg(min_by(struct(cols: _*), col("doc_id")).as("d"))
-            .select(col("fp") +: cols.map(c => col(s"d.$c")): _*)
-          val fresh =
-            if (graft.io.IdempotentWriter.pathExists(
-                batch.sparkSession, path))
-              keepers.join(
-                batch.sparkSession.read.parquet(path).select("fp"),
-                Seq("fp"), "left_anti")
-            else keepers
-          fresh.write.mode("append").parquet(path)
-        }
+      path: String, checkpoint: String): Unit =
+    drain(docs, checkpoint) { (batch, _) =>
+      val cols = batch.columns.map(col).toIndexedSeq
+      val keepers = batch.withColumn("fp", fpExpr)
+        .groupBy(col("fp"))
+        .agg(min_by(struct(cols: _*), col("doc_id")).as("d"))
+        .select(col("fp") +: cols.map(c => col(s"d.$c")): _*)
+      val fresh =
+        if (graft.io.IdempotentWriter.pathExists(batch.sparkSession, path))
+          keepers.join(batch.sparkSession.read.parquet(path).select("fp"),
+            Seq("fp"), "left_anti")
+        else keepers
+      fresh.write.mode("append").parquet(path)
+    }
+
+  /** Run a bounded stream to completion: `Trigger.AvailableNow` hands
+    * every micro-batch that is available at start, with its batch id,
+    * to `perBatch` via foreachBatch, and the call returns when the
+    * stream stops. Progress is kept at `checkpoint`, so a rerun on the
+    * same checkpoint resumes after the last committed batch.
+    *
+    * The shuffle-partition count is pinned to 4 for the stream's
+    * lifetime, for the reason [[runToMemory]] gives. */
+  def drain(df: DataFrame, checkpoint: String)(
+      perBatch: (DataFrame, Long) => Unit): Unit =
+    withConf(df.sparkSession, "spark.sql.shuffle.partitions" -> "4") {
+      df.writeStream
+        .foreachBatch(perBatch)
         .option("checkpointLocation", checkpoint)
         .trigger(Trigger.AvailableNow())
         .start()
-      q.awaitTermination()
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
-  }
+        .awaitTermination()
+    }
 
   /** Run a streaming DataFrame to completion (AvailableNow) into a
     * memory sink and return the sink table.
@@ -460,29 +444,21 @@ object Streams {
   def runToMemory(df: DataFrame, name: String, mode: OutputMode,
       finalizeWatermark: Boolean = false): DataFrame = {
     val spark = df.sparkSession
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    val prevNoData =
-      spark.conf.get("spark.sql.streaming.noDataMicroBatches.enabled", "true")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
     // Skip the trailing no-data micro-batch unless the stream NEEDS
     // the final watermark advance (event-time timeouts — sessionize):
     // it exists to advance the watermark for Append-mode state, and
     // for Complete-mode aggs / immediate-emit operators (dedup, inner
     // interval join) it is pure state-store churn on a bounded replay.
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled",
-      finalizeWatermark.toString)
-    try {
-      val q = df.writeStream
+    withConf(spark, "spark.sql.shuffle.partitions" -> "4",
+        "spark.sql.streaming.noDataMicroBatches.enabled" ->
+          finalizeWatermark.toString) {
+      df.writeStream
         .format("memory")
         .queryName(name)
         .outputMode(mode)
         .trigger(Trigger.AvailableNow())
         .start()
-      q.awaitTermination()
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prev)
-      spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled",
-        prevNoData)
+        .awaitTermination()
     }
     spark.table(name)
   }

@@ -285,33 +285,25 @@ class RegistryPlanLintSpec extends SparkSpec {
       "control: a planted cartesian product is caught)") {
     import org.apache.spark.sql.functions.col
     graft.queries.Tables.prep(spark)
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     // disable broadcast so the unconditioned self-join cannot soften
     // into BroadcastNestedLoopJoin — the control must plant the exact
     // node the lint hunts
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    Session.withConf(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val ckpt = java.nio.file.Files
         .createTempDirectory("lint_ctrl_ckpt").toString
       val qes = captureExecutions {
-        val q = graft.streaming.Streams.documentsStream(spark, dir)
-          .writeStream
-          .foreachBatch { (batch: org.apache.spark.sql.DataFrame,
-              _: Long) =>
+        graft.streaming.Streams.drain(
+            graft.streaming.Streams.documentsStream(spark, dir), ckpt) {
+          (batch, _) =>
             val d = batch.select(col("doc_id")).limit(2)
             d.join(d.withColumnRenamed("doc_id", "doc_id2")).count(); ()
-          }
-          .option("checkpointLocation", ckpt)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
+        }
       }
       assert(qes.flatMap(violationsIn("control", _))
           .exists(_.contains("CartesianProduct")),
         "the planted cartesian product was NOT captured — streamed-cell " +
           "lint coverage is vacuous")
-    } finally
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    }
   }
 
   test("the stored-column-generator detector actually fires (negative " +
@@ -328,5 +320,76 @@ class RegistryPlanLintSpec extends SparkSpec {
       .select(explode(expr(
         "transform(embedding, e -> cast(e as double))")).as("x"))
     assert(storedColumnGenerators(good.queryExecution.analyzed).isEmpty)
+  }
+
+  /** Where each cross-cutting mechanism may live in `src/main/scala`,
+    * as (file, enclosing def) with "*" for a whole file: a session is
+    * built only in graft.Session; a conf is set only by
+    * `Session.withConf`, by `Tables.prep`'s session pins and by the
+    * two idempotent nanosAsLong reader pins. A flip anywhere else must
+    * go through `withConf`, so its scope stays in one place. */
+  private val BuilderAllowed = "graft/Session.scala"
+  private val ConfSetAllowed = Set(
+    "graft/Session.scala" -> "*",
+    "graft/queries/Tables.scala" -> "prep",
+    "graft/queries/Tables.scala" -> "events",
+    "graft/streaming/Streams.scala" -> "eventsStream")
+
+  /** `file:line: code` for each session build or conf set in `src`
+    * outside its allowed place. Comment lines are skipped; a line's
+    * enclosing def is the nearest `def` above it. */
+  private def strayMechanisms(file: String, src: String): List[String] = {
+    val Def = """\bdef\s+(\w+)""".r.unanchored
+    var enclosing = ""
+    src.linesIterator.zipWithIndex.flatMap { case (line, i) =>
+      line match {
+        case Def(name) => enclosing = name
+        case _ =>
+      }
+      val code = line.trim
+      val comment = Seq("*", "//", "/*").exists(code.startsWith)
+      val builder =
+        line.contains("SparkSession.builder") && file != BuilderAllowed
+      val confSet = line.contains("conf.set(") &&
+        !ConfSetAllowed(file -> "*") && !ConfSetAllowed(file -> enclosing)
+      if (!comment && (builder || confSet)) Some(s"$file:${i + 1}: $code")
+      else None
+    }.toList
+  }
+
+  test("one way to build a session and scope a conf: src/main/scala " +
+      "builds sessions only in graft.Session and sets confs only where " +
+      "allowed") {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala")
+    val files = java.nio.file.Files.walk(root).iterator.asScala
+      .filter(_.toString.endsWith(".scala")).toList
+    assert(files.size > 50, s"lint lost coverage: ${files.size} files")
+    val stray = files.flatMap { p =>
+      strayMechanisms(root.relativize(p).toString,
+        new String(java.nio.file.Files.readAllBytes(p), "UTF-8"))
+    }
+    assert(stray.isEmpty,
+      s"use graft.Session.local / Session.withConf instead:\n" +
+        stray.mkString("\n"))
+  }
+
+  test("the one-mechanism lint flags a stray flip and a stray builder " +
+      "(negative control: the lint must not pass vacuously)") {
+    val src =
+      """object Tables {
+        |  def prep(spark: SparkSession): Unit =
+        |    spark.conf.set("spark.sql.ansi.enabled", "false")
+        |  def memoKeyed(spark: SparkSession): DataFrame = {
+        |    // spark.conf.set( in a comment is fine
+        |    spark.conf.set("spark.sql.adaptive.enabled", "false")
+        |    SparkSession.builder().getOrCreate().range(1)
+        |  }
+        |}""".stripMargin
+    val f = "graft/queries/Tables.scala"
+    assert(strayMechanisms(f, src) === List(
+      s"""$f:6: spark.conf.set("spark.sql.adaptive.enabled", "false")""",
+      s"$f:7: SparkSession.builder().getOrCreate().range(1)"))
+    assert(strayMechanisms("graft/Session.scala", src).isEmpty)
   }
 }

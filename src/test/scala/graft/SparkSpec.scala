@@ -18,14 +18,12 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
       df: => org.apache.spark.sql.DataFrame, what: String): Unit = {
     import org.apache.spark.sql.execution.joins.{
       ShuffledHashJoinExec, SortMergeJoinExec}
-    val prev = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
+    Session.withConf(spark, "spark.sql.adaptive.enabled" -> "false") {
       val plan = df.queryExecution.executedPlan
       assert(plan.collect { case j: SortMergeJoinExec => j }.isEmpty &&
         plan.collect { case j: ShuffledHashJoinExec => j }.isEmpty,
         s"corpus-shuffling join inside $what:\n$plan")
-    } finally spark.conf.set("spark.sql.adaptive.enabled", prev)
+    }
   }
 }
 

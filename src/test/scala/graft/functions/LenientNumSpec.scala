@@ -1,5 +1,6 @@
 package graft.functions
 
+import graft.Session.withConf
 import graft.SparkSpec
 import graft.norm.Coerce
 import org.apache.spark.sql.functions._
@@ -85,10 +86,9 @@ class LenientNumSpec extends SparkSpec {
       .select(estadosCols.zipWithIndex.map { case (n, i) =>
         element_at(col("arr"), i + 1).as(n)
       }.toIndexedSeq: _*)
-    spark.conf.set("spark.sql.codegen.fallback", "false")
-    try {
+    withConf(spark, "spark.sql.codegen.fallback" -> "false") {
       val out = Pipeline.estados(raw).orderBy("id").collect()
       assert(out.length === 1)
-    } finally spark.conf.set("spark.sql.codegen.fallback", "true")
+    }
   }
 }

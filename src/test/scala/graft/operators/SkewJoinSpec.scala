@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Session.withConf
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
@@ -89,8 +90,7 @@ class SkewJoinSpec extends SparkSpec {
 
   test("AQE off: salted result still identical to the plain join " +
       "(the non-AQE-engine fallback the doc claims)") {
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
+    withConf(spark, "spark.sql.adaptive.enabled" -> "false") {
       val plain = bigSkewed.join(smallDim, col("k") === col("dk"))
         .groupBy(col("name")).agg(count(lit(1)).as("n"),
           sum(col("payload")).as("s"))
@@ -101,7 +101,7 @@ class SkewJoinSpec extends SparkSpec {
           sum(col("payload")).as("s"))
         .collect().map(_.toSeq).toSet
       assert(salted === plain)
-    } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+    }
   }
 
   test("flagging respects the exact integer cross-multiply predicate") {

@@ -2,6 +2,7 @@ package graft.queries
 
 import java.nio.file.Files
 
+import graft.Session.withConf
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
@@ -288,8 +289,7 @@ class CurationSpec extends SparkSpec {
     import org.apache.spark.sql.execution.window.WindowExec
     val dir = corpus((0L until 10L).map(i => (i, "a b c", "en", "s")))
     val df = Curation.sequencePack(spark, dir)
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
+    withConf(spark, "spark.sql.adaptive.enabled" -> "false") {
       val plan = df.queryExecution.executedPlan
       // every window over more than the tiny bucket-offset table must
       // carry a non-empty partition spec
@@ -299,7 +299,7 @@ class CurationSpec extends SparkSpec {
       // exactly the buckets-count-sized offset window may be global
       assert(unpartitioned.size <= 1,
         s"corpus-row window lost its bucket partitioning:\n$plan")
-    } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+    }
   }
 
   test("corpus shuffle: positions form an exact permutation, " +
@@ -324,15 +324,14 @@ class CurationSpec extends SparkSpec {
     import org.apache.spark.sql.execution.window.WindowExec
     val dir = corpus((0L until 10L).map(i => (i, "x", "en", "s")))
     val df = Curation.corpusShuffle(spark, dir)
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
+    withConf(spark, "spark.sql.adaptive.enabled" -> "false") {
       val plan = df.queryExecution.executedPlan
       val windows = plan.collect { case w: WindowExec => w }
       assert(windows.nonEmpty, s"no window found:\n$plan")
       // exactly the buckets-count-sized offset window may be global
       assert(windows.count(_.partitionSpec.isEmpty) <= 1,
         s"corpus-row rank window lost its bucket partitioning:\n$plan")
-    } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+    }
   }
 
   test("mixture allocation: scarce source caps, leftover redistributes by weight") {
@@ -395,14 +394,13 @@ class CurationSpec extends SparkSpec {
     import org.apache.spark.sql.execution.window.WindowExec
     val dir = corpus((0L until 10L).map(i => (i, "a b c", "en", "s")))
     val df = Curation.shuffledPack(spark, dir)
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
+    withConf(spark, "spark.sql.adaptive.enabled" -> "false") {
       val plan = df.queryExecution.executedPlan
       val windows = plan.collect { case w: WindowExec => w }
       assert(windows.nonEmpty, s"no window found:\n$plan")
       assert(windows.count(_.partitionSpec.isEmpty) <= 1,
         s"corpus-row cumsum window lost its bucket partitioning:\n$plan")
-    } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+    }
   }
 
   test("shuffled packing differs from doc_id-order packing in straddle pattern") {

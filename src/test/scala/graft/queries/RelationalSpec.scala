@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.Session.withConf
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
@@ -27,15 +28,13 @@ class RelationalSpec extends SparkSpec {
     val l = spark.table("spec_lineitem_b")
     // sf0.001 is small enough that broadcast would win; disable it so
     // the plan shows what a 100 TB fact-fact join would do.
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    withConf(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val joined = o.join(l, o("o_orderkey") === l("l_orderkey"))
       joined.collect() // force execution so AQE finalizes the plan
       val plan = joined.queryExecution.executedPlan.toString
       assert(plan.contains("SortMergeJoin"), plan)
       assert(!plan.contains("Exchange"), s"bucketed join must not shuffle:\n$plan")
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    }
   }
 
   test("q212: a fresh session plans the bucketed SMJ shuffle-free and " +
@@ -45,9 +44,7 @@ class RelationalSpec extends SparkSpec {
     // the reading session did none of the layout work — catalog
     // metadata (the bucket spec) is all it has
     val s = ColdRestart.fresh(spark)
-    val prev = s.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    withConf(s, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val o = s.table(ot)
       val l = s.table(lt)
       val joined = o.join(l, o("o_orderkey") === l("l_orderkey"))
@@ -56,52 +53,41 @@ class RelationalSpec extends SparkSpec {
       assert(plan.contains("SortMergeJoin"), plan)
       assert(!plan.contains("Exchange"),
         s"catalog bucketed join must not shuffle:\n$plan")
-    } finally s.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    }
     // a point predicate on the bucket key opens 1 of 8 buckets —
     // pruned from the catalog's bucket spec before any file opens.
     // DisableUnnecessaryBucketedScan turns the bucketed scan off for
     // a bare filter (no join/agg wants the partitioning) and with it
     // forfeits the pruning — scope it off to pin the pruning fact.
-    val prevAuto =
-      s.conf.get("spark.sql.sources.bucketing.autoBucketedScan.enabled")
-    try {
-      s.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled",
-        "false")
+    withConf(s,
+        "spark.sql.sources.bucketing.autoBucketedScan.enabled" -> "false") {
       val probe = s.table(lt).filter(col("l_orderkey") === lit(1L))
       probe.collect()
       val pplan = probe.queryExecution.executedPlan.toString
       assert(pplan.contains("SelectedBucketsCount: 1 out of 8"),
         s"point lookup must prune to one bucket:\n$pplan")
-    } finally s.conf.set(
-      "spark.sql.sources.bucketing.autoBucketedScan.enabled", prevAuto)
+    }
   }
 
   test("q93 injects a runtime bloom filter that prunes the fact side pre-shuffle") {
     Tables.prep(spark)
-    val scoped = Map(
-      "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
-      "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "1KB",
-      "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold" -> "100MB",
-      // injection requires a probably-shuffle join; see bloomPruneJoin
-      "spark.sql.autoBroadcastJoinThreshold" -> "-1")
-    val prev = scoped.keys.map(k => k -> spark.conf.getOption(k)).toMap
-    scoped.foreach { case (k, v) => spark.conf.set(k, v) }
-    val withBloom = try {
+    val withBloom = withConf(spark,
+        "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
+        "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "1KB",
+        "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold" -> "100MB",
+        // injection requires a probably-shuffle join; see bloomPruneJoin
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val df = Relational.bloomPruneJoinPlan(spark, dir)
       val plan = df.queryExecution.executedPlan.toString
       assert(plan.contains("might_contain"),
         s"runtime bloom filter must inject under the scoped confs:\n$plan")
       assert(plan.contains("bloom_filter_agg"), plan)
       df.collect().map(_.toSeq).toSet
-    } finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
     }
     // pruning is semantics-preserving: same rows without the bloom
-    val without = {
-      spark.conf.set("spark.sql.optimizer.runtime.bloomFilter.enabled", "false")
-      try Relational.bloomPruneJoinPlan(spark, dir).collect().map(_.toSeq).toSet
-      finally spark.conf.unset("spark.sql.optimizer.runtime.bloomFilter.enabled")
+    val without = withConf(spark,
+        "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "false") {
+      Relational.bloomPruneJoinPlan(spark, dir).collect().map(_.toSeq).toSet
     }
     assert(withBloom === without)
   }

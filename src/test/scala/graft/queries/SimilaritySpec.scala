@@ -2,6 +2,7 @@ package graft.queries
 
 import java.nio.file.Files
 
+import graft.Session.withConf
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
@@ -86,8 +87,7 @@ class SimilaritySpec extends SparkSpec {
       "annLsh" -> Similarity.annLsh(spark, dir),
       "labelCentroids" -> Similarity.labelCentroids(spark, dir),
       "ivfAnn" -> Similarity.ivfAnn(spark, dir))
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
+    withConf(spark, "spark.sql.adaptive.enabled" -> "false") {
       for ((name, df) <- dfs) {
         val plan = df.queryExecution.executedPlan
         val windows = plan.collect { case w: WindowExec => w }
@@ -110,7 +110,7 @@ class SimilaritySpec extends SparkSpec {
             s"$name: still ranks via a full-sort window:\n$plan")
         }
       }
-    } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+    }
   }
 
   test("PQ: codebook is per-subspace-width, codes reconstruct full width, " +

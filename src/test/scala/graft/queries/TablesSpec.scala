@@ -106,6 +106,20 @@ class TablesSpec extends SparkSpec {
     assert(spark.conf.get("spark.sql.adaptive.enabled") === "true")
   }
 
+  test("memoKeyed keys on the shuffle-partition count it bakes into " +
+      "the leaf") {
+    val rows = spark.range(0, 100).select(col("id").as("k"))
+    val dir = Files.createTempDirectory("memo_keyed_n").toString
+    val at4 = Tables.memoKeyed(spark, dir, "mk_n", Seq("k"))(rows)
+    assert(at4.rdd.getNumPartitions === 4)
+    val at2 = graft.Session.withConf(spark,
+        "spark.sql.shuffle.partitions" -> "2") {
+      Tables.memoKeyed(spark, dir, "mk_n", Seq("k"))(rows)
+    }
+    assert(at2.rdd.getNumPartitions === 2,
+      "a leaf memoized at 4 partitions was served to a 2-partition caller")
+  }
+
   test("streaming events reader surfaces identical timestamps from " +
       "both shipped ts encodings") {
     def streamed(name: String, sink: String): Seq[(Long, Long)] = {

@@ -2,6 +2,7 @@ package graft.queries
 
 import java.nio.file.Files
 
+import graft.Session.withConf
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
@@ -204,8 +205,7 @@ class TextAnalysisSpec extends SparkSpec {
       BroadcastNestedLoopJoinExec, ShuffledHashJoinExec, SortMergeJoinExec}
     val dir = corpus(Seq("a a b", "a c", "b c a"))
     val df = TextAnalysis.unigramLm(spark, dir)
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
+    withConf(spark, "spark.sql.adaptive.enabled" -> "false") {
       val plan = df.queryExecution.executedPlan
       val bcast = plan.collect { case j: BroadcastNestedLoopJoinExec => j }
       val shuffleJoins = plan.collect {
@@ -217,7 +217,7 @@ class TextAnalysisSpec extends SparkSpec {
       assert(bcast.size === 1, s"expected 1 broadcast cross join:\n$plan")
       // scoring is an in-scan fold: no row-matching join of tokens
       assert(shuffleJoins.isEmpty, s"per-token shuffle join found:\n$plan")
-    } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+    }
   }
 
   test("bigram lm: coherent word order scores fewer bits than scrambled") {
@@ -272,14 +272,13 @@ class TextAnalysisSpec extends SparkSpec {
     import org.apache.spark.sql.execution.aggregate.ObjectHashAggregateExec
     val dir = corpus(Seq("join hash", "join batch row", "scan filter"))
     val df = TextAnalysis.bm25(spark, dir)
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
+    withConf(spark, "spark.sql.adaptive.enabled" -> "false") {
       val plan = df.queryExecution.executedPlan
       assert(plan.collect { case w: WindowExec => w }.isEmpty,
         s"bm25 must not window-sort per query:\n$plan")
       assert(plan.collect { case o: ObjectHashAggregateExec => o }.nonEmpty,
         s"bm25 bounded-heap top-k aggregate missing:\n$plan")
-    } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+    }
   }
 
   test("vocab growth: unique-per-doc types keep the curve growing; " +

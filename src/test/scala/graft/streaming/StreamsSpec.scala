@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.Session.withConf
 import graft.SparkSpec
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -309,13 +310,11 @@ class StreamsSpec extends SparkSpec {
     val q = graft.queries.StreamingQ.all("q126_stream_top_terms")
     val defaultRows = q(spark, dir).collect().toSeq
     assert(defaultRows.nonEmpty)
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withConf(spark, "spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
       val rocksRows = q(spark, dir).collect().toSeq
       assert(rocksRows === defaultRows)
-    } finally spark.conf.unset(
-      "spark.sql.streaming.stateStore.providerClass")
+    }
   }
 
   /** Shared arrival-stream harness for the streamed-store tests
@@ -355,19 +354,11 @@ class StreamsSpec extends SparkSpec {
         java.nio.file.Files.move(src, arrivals.resolve(s"$name.parquet"))
       } finally part.close()
     }
-    def runStream(): Unit = {
-      val q = spark.readStream.schema(docsSchema)
-        .option("pathGlobFilter", "*.parquet")
-        .parquet(arrivals.toString)
-        .writeStream
-        .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
-          applyBatch(b, store)
-        }
-        .option("checkpointLocation", scratch.resolve("ckpt").toString)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
+    def runStream(): Unit =
+      Streams.drain(spark.readStream.schema(docsSchema)
+          .option("pathGlobFilter", "*.parquet")
+          .parquet(arrivals.toString),
+        scratch.resolve("ckpt").toString)((b, _) => applyBatch(b, store))
   }
 
   test("q216 streamed postings merge: cross-batch terms merge, the final " +
@@ -477,19 +468,13 @@ class StreamsSpec extends SparkSpec {
       } finally part.close()
     }
     val store = scratch.resolve("store")
-    def runStream(): Unit = {
-      val q = spark.readStream.schema(docsSchema)
-        .option("pathGlobFilter", "*.parquet")
-        .parquet(arrivals.toString)
-        .writeStream
-        .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
-          graft.queries.Curation.applyArrivalBatch(spark, b, store)
-        }
-        .option("checkpointLocation", scratch.resolve("ckpt").toString)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
+    def runStream(): Unit =
+      Streams.drain(spark.readStream.schema(docsSchema)
+          .option("pathGlobFilter", "*.parquet")
+          .parquet(arrivals.toString),
+        scratch.resolve("ckpt").toString) { (b, _) =>
+        graft.queries.Curation.applyArrivalBatch(spark, b, store)
+      }
     def labelsOf(s: java.nio.file.Path): Map[Long, Long] =
       spark.read.parquet(graft.queries.Curation.latestLabels(s).get.toString)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
